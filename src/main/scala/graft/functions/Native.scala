@@ -97,8 +97,12 @@ case class FloatVecDot(left: Expression, right: Expression)
   * dimension order — operation-for-operation identical to the Scala-UDF
   * form it replaces (`(q(j).toDouble - cents(code(j/sd))(j).toDouble)²`
   * accumulated left-to-right, float→double promotion per element), so every
-  * score is bit-identical and the DuckDB oracle is unchanged. The subspace
-  * width is derived as `q.length / code.length`.
+  * score is bit-identical and the DuckDB oracle is unchanged.
+  *
+  * Contract: `code` holds m > 0 centroid ids, one per subspace, and
+  * `q.length` is a multiple of m; the subspace width is `q.length / m`.
+  * Any other shape throws IllegalArgumentException instead of silently
+  * dropping the trailing `q.length % m` dimensions.
   *
   * Why native (guide §4 / round-6 measurement): a Spark 4 Scala UDF pays
   * ~40µs PER CALL just converting its collection arguments (measured: a
@@ -199,7 +203,9 @@ object NativeKernels {
       cb: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
     val n = q.numElements()
     val m = code.numElements()
-    val sd = if (m == 0) n else n / m
+    require(m > 0 && n % m == 0,
+      s"pq_dist: query length $n is not a positive multiple of code length $m")
+    val sd = n / m
     var sum = 0.0
     var s = 0
     while (s < m) {

@@ -37,8 +37,44 @@ private[pipeline] object Manifests {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** `s` as a JSON string literal, quotes included: quote and backslash are
+    * backslash-escaped and control characters become 4-hex-digit unicode
+    * escapes, so any run id survives the round trip through [[readField]].
+    */
+  def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b.append('"').result()
+  }
+
+  /** The value of key `k`: a string literal unescaped, or a bare token.
+    * Inside a written string every `"` is escaped, so a key pattern cannot
+    * match inside a value.
+    */
   def readField(json: String, k: String): Option[String] =
-    s"""\"$k\":\\s*("?)([^,}\"]*)\\1""".r.findFirstMatchIn(json).map(_.group(2))
+    s"""\"$k\":\\s*(?:\"((?:[^\"\\\\]|\\\\.)*)\"|([^,}\\s]*))""".r
+      .findFirstMatchIn(json)
+      .map(m => Option(m.group(1)).fold(m.group(2))(unescape))
+
+  private val shortEscapes =
+    Map('n' -> '\n', 't' -> '\t', 'r' -> '\r', 'b' -> '\b', 'f' -> '\f')
+
+  private def unescape(s: String): String = {
+    val b = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      if (s.charAt(i) != '\\') { b += s.charAt(i); i += 1 }
+      else if (s.charAt(i + 1) == 'u') {
+        b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
+      } else { b += shortEscapes.getOrElse(s.charAt(i + 1), s.charAt(i + 1)); i += 2 }
+    }
+    b.result()
+  }
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
@@ -74,7 +110,7 @@ final class LocalManifestStore(outDir: String) extends SnapshotStore {
   override def commit(m: BucketManifest): Unit =
     Manifests.atomicWriteJson(dir.resolve(s"bucket-${m.bucket}.json"),
       s"""{"bucket":${m.bucket},"n_docs":${m.nDocs},"n_spans":${m.nSpans},""" +
-        s""""n_errors":${m.nErrors},"run_id":"${m.runId}"}""")
+        s""""n_errors":${m.nErrors},"run_id":${Manifests.jsonString(m.runId)}}""")
 
   override def revoke(bucket: Int): Unit =
     Files.deleteIfExists(dir.resolve(s"bucket-$bucket.json"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
@@ -8,43 +8,46 @@ import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Doc
 import graft.tokenize.SpanTokenizer
+import Manifests.deleteRecursively
 
 /** The end-to-end extraction job (SURVEY.md §4 physical plan):
   *
-  *   read -> drop committed buckets -> skew-aware repartition ->
-  *   mapPartitions(tokenizer kernel) -> atomic group-dir write ->
-  *   metrics + per-bucket commit manifests
+  *   read -> drop committed buckets -> skew-aware partition ->
+  *   mapPartitions(tokenizer kernel) -> one write of every commit group ->
+  *   one metrics read-back -> per-group atomic rename + bucket manifests
   *
   * Scale design decisions, in order of importance at 10^12 docs:
   *  - documents stay single rows end-to-end (extraction is embarrassingly
-  *    parallel, map-only; the ONLY planned shuffle is the repartition);
+  *    parallel, map-only; the ONLY planned shuffle is the heavy relocation);
+  *  - one input scan per run, whatever the commit granularity: the kernel
+  *    tags every row with its commit group and one job writes all groups to
+  *    one temp dir, partitioned by group;
   *  - buckets = hash(doc_id) % B drive resumability (a bucket is the commit
-  *    unit recorded in the manifest store); buckets are processed in groups
-  *    of `groupSize`, and each group's output is written to a temp dir then
-  *    atomically renamed to `data/group=<buckets>` — a group is either fully
-  *    visible or absent, so a kill loses at most one group of work. In
-  *    production the rename is an Iceberg snapshot commit (Checkpoint.scala);
-  *    on re-run, group dirs whose buckets are not all manifest-committed are
-  *    swept away before processing, so output rows are exactly-once;
-  *  - file count is bounded by tasks-per-group (one file per non-empty task),
-  *    NOT tasks x buckets: we deliberately do NOT partitionBy("bucket") at
-  *    write time — with a salted composite repartition every task would touch
-  *    every bucket and emit tasks x buckets small files per group, the classic
-  *    small-files failure at 1000 executors. Bucket stays a data column; the
-  *    manifest maps buckets -> group dirs for pruned reads;
-  *  - skew: doc_weight = total raw payload length; docs above `heavyWeight`
+  *    unit recorded in the manifest store); buckets commit in groups of
+  *    `groupSize`: a group's temp subdir is atomically renamed to
+  *    `data/group=<buckets>`, then its bucket manifests are written, so a
+  *    group is either fully visible or absent. In production the rename is
+  *    an Iceberg snapshot commit (Checkpoint.scala); on re-run, group dirs
+  *    whose buckets are not all manifest-committed are swept away, so output
+  *    rows are exactly-once. A kill DURING the single write loses all of the
+  *    run's work; a kill in the commit loop loses only the groups not yet
+  *    renamed and committed;
+  *  - file count is at most tasks x groups per run (one file per task per
+  *    group it touches), NOT tasks x buckets: partitionBy("bucket") would
+  *    emit one small file per task per bucket, the classic small-files
+  *    failure at 1000 executors. Bucket stays a data column; the manifest
+  *    maps buckets -> group dirs for pruned reads;
+  *  - skew: doc_weight = total raw payload bytes; docs above `heavyWeight`
   *    are isolated onto their own partitions (a pathological mega-doc can't
-  *    hold a whole partition of normal docs hostage), everything else is
-  *    salted uniformly (hash(doc_id) is already uniform);
-  *  - per-group metrics read back only that group's files (O(group), not
-  *    O(total output) — re-reading the whole table per commit would be
-  *    quadratic across a run);
+  *    hold a whole partition of normal docs hostage);
+  *  - the metrics read-back scans only this run's temp dir (O(run), not
+  *    O(total output)) and collects at most buckets x partitions rows;
   *  - lineage: every output row carries extraction_path + the physical
   *    partition id that produced it; per-(bucket, partition) metric rows
   *    land next to the data (Provenance.extraction_path semantics,
   *    reference src/pipeline/provenance.py:132-139). Metrics are append-only
-  *    history keyed by run_id; the authoritative totals live in the bucket
-  *    manifests.
+  *    history keyed by run_id, written for committed buckets only; the
+  *    authoritative totals live in the bucket manifests.
   */
 object ExtractJob {
 
@@ -57,8 +60,8 @@ object ExtractJob {
     *
     * heavyWeight sizing rule (measured, see BASELINE.md skew A/B): isolate a
     * document only when it is a meaningful fraction (~5%) of one partition's
-    * total char budget — below that, the salted uniform path absorbs the
-    * skew for free, and isolation's extra input scan + shuffle wave is a net
+    * total char budget — below that, the light path absorbs the skew for
+    * free, and isolation's extra input scan + shuffle wave is a net
     * loss (800k-doc corpus with 0.65k-x megas ran ~20% slower isolated).
     * Default 5M chars ~ 5% of a 100M-char partition at the bench shape; at
     * 10^12 docs set it from table stats: heavyWeight ~ 0.05 * totalChars /
@@ -68,7 +71,6 @@ object ExtractJob {
       nBuckets: Int = 32,
       groupSize: Int = 8,
       heavyWeight: Long = 5000000L,
-      saltMod: Int = 64,
       // Heavy-branch relocation: heavy docs are spread over this many PINNED
       // partitions (REPARTITION_BY_NUM, not AQE-coalescible) so a
       // kernel+write task carries ~1-2 mega-docs. The relocation shuffle is
@@ -76,7 +78,7 @@ object ExtractJob {
       // round 6 (same corpus, same window) and lost ~30% at c16 — without
       // relocation each heavy scan split funnels its ~20+ megas through one
       // encode task. The count is sized from the DATA (expected heavies per
-      // group / target megas-per-task; at 10^12 docs set it from table
+      // run / target megas-per-task; at 10^12 docs set it from table
       // stats), deliberately NOT from the core count: a cores-proportional
       // count (an earlier round-6 shape) launches more tasks on bigger
       // clusters for the same 390 megas, pure scheduling overhead on the
@@ -84,16 +86,6 @@ object ExtractJob {
       // few partitions re-creates the funnel via hash-collision stragglers
       // (128 parts measured 35% slower at c16 than 512).
       heavyParts: Int = 256,
-      // Salted light-branch shuffle, OFF by default (round-6 measurement):
-      // with heavy docs isolated onto their own partitions, the remaining
-      // light work is byte-proportional and parquet scan splits are already
-      // byte-balanced (maxPartitionBytes packing), so the salt shuffle
-      // moved the full corpus bytes through a shuffle for no balance gain —
-      // removing it cut the c16 skew leg ~9% and left c4 unchanged (A/B in
-      // OPTIMIZATION_r06.md). Turn back on for sources whose per-row WORK
-      // is not byte-proportional (then byte-balanced splits are not
-      // work-balanced and the salt spread earns its shuffle).
-      saltLight: Boolean = false,
       // Output writer options. Dictionary encoding is disabled by default:
       // extracted span text is high-cardinality, so the dictionary pass
       // burns encoder CPU and memory only to overflow and fall back —
@@ -103,7 +95,8 @@ object ExtractJob {
         Map("parquet.enable.dictionary" -> "false"),
       tokenizer: SpanTokenizer.Config = SpanTokenizer.default,
       runId: String = "run",
-      // test hook: simulate a crash after N commit groups
+      // test hook: simulate a crash after N commit groups are committed (the
+      // later groups' rows are written but never renamed into `data`)
       failAfterGroups: Option[Int] = None,
       // test hook: simulate a crash after N BUCKET manifest commits — lands
       // inside the per-bucket commit loop, the window the sweep's manifest
@@ -120,7 +113,10 @@ object ExtractJob {
       nSpans: Long,
       nErrors: Long)
 
-  /** One extracted output row (long-lived storage schema). */
+  /** One extracted output row (long-lived storage schema). `commit_group`
+    * is the write's partition column: it names the temp subdir the row lands
+    * in and is not stored in the files.
+    */
   final case class OutRow(
       doc_id: String,
       spans: Seq[graft.model.Span],
@@ -129,14 +125,22 @@ object ExtractJob {
       modalities: Seq[String],
       extraction_path: Seq[String],
       partition_id: Int,
-      bucket: Int)
+      bucket: Int,
+      commit_group: Int)
+
+  /** One per-(bucket, partition) lineage row of the `metrics` table. */
+  final case class MetricRow(
+      bucket: Int,
+      partition_id: Int,
+      n_docs: Long,
+      n_spans: Long,
+      n_errors: Long,
+      run_id: String)
 
   def bucketOf(docId: String, nBuckets: Int): Int = {
     val h = graft.functions.Hashing.fnv1a64(docId)
     (((h % nBuckets) + nBuckets) % nBuckets).toInt
   }
-
-  private def deleteRecursively(p: Path): Unit = Manifests.deleteRecursively(p)
 
   /** Sweep stale state from a previous crashed run: temp dirs, and any group
     * dir whose buckets are not ALL manifest-committed (a crash between the
@@ -189,13 +193,16 @@ object ExtractJob {
     import spark.implicits._
     val store = new LocalManifestStore(outDir)
     val committed = sweepUncommitted(outDir, store, store.committedBuckets())
-    val allBuckets = 0 until cfg.nBuckets
-    val remaining = allBuckets.filterNot(committed.contains)
+    val remaining = (0 until cfg.nBuckets).filterNot(committed.contains)
     if (remaining.isEmpty)
       return RunStats(Nil, committed.toSeq.sorted, 0L, 0L, 0L)
 
     val nB = cfg.nBuckets
     val heavy = cfg.heavyWeight
+    val groups = remaining.grouped(cfg.groupSize).toSeq
+    // bucket -> index of its commit group; shipped to the kernel's closure
+    val groupOf = Array.fill(nB)(-1)
+    groups.zipWithIndex.foreach { case (g, gi) => g.foreach(groupOf(_) = gi) }
     // weight + bucket computed as COLUMNS before the shuffle: a typed
     // map-to-tuple here would deserialize + re-serialize every nested spans
     // array once more per row; `aggregate` over the struct column and a
@@ -205,108 +212,98 @@ object ExtractJob {
     // character count rescans every byte, and the weight is a routing
     // heuristic — bytes are, if anything, the truer cost proxy (threshold
     // docs above updated to bytes).
-    val keyed = docs.toDF()
+    val allKeyed = docs.toDF()
       .withColumn("weight", aggregate(col("spans"), lit(0L), (acc, s) =>
         acc + octet_length(s.getField("text")).cast("long") +
           octet_length(s.getField("media_ref")).cast("long")))
       .withColumn("bucket", bucketUdf(col("doc_id")))
+    // At 10^12 scale this filter is partition pruning on the bucketed input
+    // table; a fresh run reads everything and skips it.
+    val keyed =
+      if (committed.isEmpty) allKeyed
+      else allKeyed.filter(col("bucket").isin(remaining.map(Integer.valueOf): _*))
 
-    val groups = remaining.grouped(cfg.groupSize).toSeq
-    var processed = List.empty[Int]
-    var totDocs = 0L; var totSpans = 0L; var totErrors = 0L
+    // Light docs stay in their byte-balanced scan splits (a salted shuffle
+    // bought no balance for a full corpus pass through the shuffle; round 6,
+    // OPTIMIZATION_r06.md). Heavy docs get their own repartition by doc_id.
+    // The union CONCATENATES the two partition sets without another shuffle,
+    // so a straggler mega-doc can only delay its own partition. The two
+    // branches are two scans of the input; on the production table the
+    // weight predicate pushes into row-group stats (cluster by weight at
+    // ingest), so the heavy scan is ~free.
+    //
+    // The heavy repartition PINS its partition count at the data-sized
+    // `heavyParts`: a column-only repartition is AQE-coalescible, and AQE's
+    // byte-targeted coalescing packed the skewed bench corpus's megas 14-25
+    // per task (local[16], round 6) — the very funnel isolation exists to
+    // prevent. Pinned, each mega lands (nearly) alone in its kernel+write task.
+    val light = keyed.filter(col("weight") < heavy)
+    val heavyDs = keyed.filter(col("weight") >= heavy)
+      .repartition(cfg.heavyParts, col("doc_id"))
+    // heavy partitions FIRST: union concatenates partition lists and Spark
+    // schedules tasks in partition order — longest-processing-time-first
+    // lets the mega-doc tasks run while light tasks pack around them instead
+    // of starting after the lights drain
     val tok = cfg.tokenizer
+    val extracted = heavyDs.unionByName(light)
+      .select(col("doc_id"), col("spans")).as[Doc]
+      .mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        SpanTokenizer.extractPartition(it, tok).map { e =>
+          val b = bucketOf(e.doc_id, nB)
+          val gi = groupOf(b)
+          OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
+            e.extraction_path :+ s"commit_group:$gi", pid, b, gi)
+        }
+      }
 
-    groups.zipWithIndex.foreach { case (group, gi) =>
-      if (cfg.failAfterGroups.forall(gi < _)) {
-        // At 10^12 scale this filter is partition pruning on the bucketed
-        // input table (each group scans only its own buckets); locally it
-        // re-derives the input per group — bench runs use one group.
-        val inGroup = keyed.filter(col("bucket").isin(group.map(Integer.valueOf): _*))
-        // Light docs: salted hash repartition (uniform). Heavy docs: their own
-        // repartition by doc_id. The union CONCATENATES the two partition
-        // sets without another shuffle, so no light doc ever shares a
-        // partition with a mega-doc — a straggler mega-doc can only delay
-        // its own partition. The two branches are two scans of the input; on
-        // the production table the weight predicate pushes into row-group
-        // stats (cluster by weight at ingest), so the heavy scan is ~free.
-        //
-        // The heavy repartition PINS its partition count (round-6 fix). A
-        // column-only repartition is an AQE-coalescible shuffle
-        // (REPARTITION_BY_COL), and AQE's byte-targeted coalescing was
-        // silently undoing this whole layout: measured on the skewed bench
-        // corpus at local[16] x 4 waves, the heavy branch's 64 partitions
-        // coalesced to SIX carrying 14-25 mega-docs EACH — the exact
-        // all-megas-through-one-task funnel the isolation exists to prevent,
-        // and the write-stage wall behind the sub-0.8 skew scaling readings
-        // of rounds 3-5. Pinned at `shuffle.partitions x heavyFanout`, each
-        // mega lands alone in its own kernel+write task (an empty heavy
-        // partition costs a no-op task launch). The light branch skips the
-        // shuffle entirely by default (see Config.saltLight): scan splits
-        // are byte-balanced, which IS the balance the salt bought, minus a
-        // full corpus pass through the shuffle machinery. AQE still
-        // coalesces every other shuffle in the job (metrics aggregation,
-        // the opt-in salted path).
-        val spNum = spark.sessionState.conf.numShufflePartitions
-        val lightRaw = inGroup.filter(col("weight") < heavy)
-        val light =
-          if (cfg.saltLight)
-            lightRaw.repartition(spNum, col("bucket"),
-              pmod(xxhash64(col("doc_id")), lit(cfg.saltMod)))
-          else lightRaw
-        val heavyDs = inGroup.filter(col("weight") >= heavy)
-          .repartition(cfg.heavyParts, col("doc_id"))
-        // heavy partitions FIRST: union concatenates partition lists and
-        // Spark schedules tasks in partition order — longest-processing-
-        // time-first lets the mega-doc tasks run while light tasks pack
-        // around them instead of starting after the lights drain
-        val part = heavyDs.unionByName(light)
-        val extracted = part.select(col("doc_id"), col("spans")).as[Doc]
-          .mapPartitions { it =>
-            val pid = TaskContext.getPartitionId()
-            SpanTokenizer.extractPartition(it, tok).map { e =>
-              OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
-                e.extraction_path :+ s"commit_group:$gi", pid,
-                bucketOf(e.doc_id, nB))
-            }
-          }
+    // One write for every group: `commit_group=<gi>` subdirs of one temp dir.
+    val tmp = Paths.get(outDir, ".tmp-group-run")
+    extracted.write.options(cfg.writeOptions).partitionBy("commit_group")
+      .mode(SaveMode.Overwrite).parquet(tmp.toString)
 
-        val gname = group.mkString("-")
-        val tmp = Paths.get(outDir, s".tmp-group-$gname")
-        extracted.write.options(cfg.writeOptions)
-          .mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val target = Paths.get(outDir, "data", s"group=$gname")
+    // One read-back of the whole temp dir: per-(bucket, partition) totals,
+    // at most buckets x partitions rows. The read pins the just-written
+    // schema explicitly: schema inference otherwise merges footers across
+    // every output file, a serial planning cost that grows with the task
+    // count and eats into the faster leg's scaling (Amdahl).
+    val metricRows = spark.read.schema(extracted.schema).parquet(tmp.toString)
+      .groupBy(col("bucket"), col("partition_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_spans")).as("n_spans"),
+        sum(col("n_errors")).as("n_errors"))
+      .withColumn("run_id", lit(cfg.runId))
+      .as[MetricRow].collect().toSeq
+    val perBucket = metricRows.groupMapReduce(_.bucket)(
+      m => (m.n_docs, m.n_spans, m.n_errors))(
+      (x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3))
+
+    var processed = Vector.empty[Int]
+    groups.zipWithIndex
+      .takeWhile { case (_, gi) => cfg.failAfterGroups.forall(gi < _) }
+      .foreach { case (group, gi) =>
+        val target = Paths.get(outDir, "data", s"group=${group.mkString("-")}")
         Files.createDirectories(target.getParent)
         deleteRecursively(target) // stale uncommitted dir from a crashed run
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-
-        // metric rows at (bucket, partition) granularity — the per-partition
-        // lineage record written alongside each commit; reads ONLY this
-        // group's files. The read pins the just-written schema explicitly:
-        // schema inference otherwise merges footers across every output
-        // file, a driver-side fixed cost that grows with the task count and
-        // eats into the faster leg's scaling (Amdahl).
-        val metrics = spark.read.schema(extracted.schema).parquet(target.toString)
-          .groupBy(col("bucket"), col("partition_id"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_spans")).as("n_spans"),
-            sum(col("n_errors")).as("n_errors"))
-          .withColumn("run_id", lit(cfg.runId))
-        metrics.write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
-
-        val perBucket = metrics.groupBy("bucket")
-          .agg(sum("n_docs").as("d"), sum("n_spans").as("s"), sum("n_errors").as("e"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toMap
+        val src = tmp.resolve(s"commit_group=$gi")
+        if (Files.isDirectory(src)) Files.move(src, target, StandardCopyOption.ATOMIC_MOVE)
+        else Files.createDirectory(target) // the group has no rows
         group.foreach { b =>
           if (cfg.failAfterBucketCommits.exists(processed.length >= _))
             throw new SimulatedCrash
           val (d, s, e) = perBucket.getOrElse(b, (0L, 0L, 0L))
           store.commit(BucketManifest(b, d, s, e, cfg.runId))
-          totDocs += d; totSpans += s; totErrors += e
-          processed = processed :+ b
+          processed :+= b
         }
       }
-    }
-    RunStats(processed, committed.toSeq.sorted, totDocs, totSpans, totErrors)
+
+    // metric rows of the committed buckets only, so the append-only history
+    // never counts a group this run did not commit
+    val done = processed.toSet
+    val rows = metricRows.filter(m => done(m.bucket))
+    if (rows.nonEmpty)
+      rows.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
+    deleteRecursively(tmp)
+    RunStats(processed, committed.toSeq.sorted, rows.map(_.n_docs).sum,
+      rows.map(_.n_spans).sum, rows.map(_.n_errors).sum)
   }
 }

@@ -67,10 +67,10 @@ object ReviewSink {
   private def manifestPath(outDir: String): Path =
     Paths.get(outDir, "_manifests", "queue.json")
 
-  private def commitManifest(outDir: String, m: QueueManifest): Unit =
+  private[graft] def commitManifest(outDir: String, m: QueueManifest): Unit =
     Manifests.atomicWriteJson(manifestPath(outDir),
       s"""{"n_entries":${m.nEntries},"n_delivered":${m.nDelivered},""" +
-        s""""n_dead":${m.nDead},"run_id":"${m.runId}"}""")
+        s""""n_dead":${m.nDead},"run_id":${Manifests.jsonString(m.runId)}}""")
 
   def readManifest(outDir: String): Option[QueueManifest] = {
     val p = manifestPath(outDir)

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, element_at}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Doc
 import graft.pipeline.{ExtractJob, LocalManifestStore}
@@ -138,5 +142,89 @@ class ExtractJobSpec extends AnyFunSuite {
       .select("partition_id").as[Int].collect().toSet
     assert(partOfMega.nonEmpty && partOfMega.intersect(partOfLight).isEmpty,
       s"mega partitions $partOfMega must be disjoint from light partitions")
+  }
+
+  private def tmpDirs(out: String): Seq[Path] =
+    scala.util.Using.resource(Files.list(Paths.get(out)))(
+      _.iterator().asScala.filter(_.getFileName.toString.startsWith(".tmp-group-")).toSeq)
+
+  /** Input records read by the tasks of every stage `body` submits. */
+  private def recordsRead(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val tag = "records-read-" + System.nanoTime()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          total.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    total.get
+  }
+
+  test("one input scan per run: records read do not grow with the commit groups") {
+    import spark.implicits._
+    val nDocs = 800
+    val corpus = Files.createTempDirectory("graft_scan").resolve("corpus").toString
+    docs(nDocs).write.parquet(corpus)
+    def input = spark.read.parquet(corpus).as[Doc]
+    def readFor(groupSize: Int): (Long, String) = {
+      val out = Files.createTempDirectory(s"graft_scan_g$groupSize").toString
+      val cfg = ExtractJob.Config(nBuckets = 16, groupSize = groupSize, runId = s"g$groupSize")
+      var stats: ExtractJob.RunStats = null
+      val n = recordsRead { stats = ExtractJob.run(spark, input, out, cfg) }
+      assert(stats.nDocs == nDocs && stats.processedBuckets == (0 until 16))
+      (n, out)
+    }
+    val (fourGroups, out) = readFor(4)
+    val (oneGroup, _) = readFor(16)
+    assert(oneGroup > 0)
+    assert(fourGroups == oneGroup,
+      s"4 commit groups read $fourGroups input records, 1 group read $oneGroup")
+
+    // each group dir holds exactly its own buckets, tagged with its group
+    val groups = (0 until 16).grouped(4).toSeq
+    val dataDir = Paths.get(out, "data")
+    val dirs = scala.util.Using.resource(Files.list(dataDir))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+    assert(dirs == groups.map(g => s"group=${g.mkString("-")}").toSet)
+    groups.zipWithIndex.foreach { case (g, gi) =>
+      val rows = spark.read.parquet(dataDir.resolve(s"group=${g.mkString("-")}").toString)
+        .select(col("bucket"), element_at(col("extraction_path"), -1))
+        .as[(Int, String)].collect()
+      assert(rows.nonEmpty)
+      assert(rows.forall(_._1 / 4 == gi), s"group $gi holds a foreign bucket")
+      assert(rows.forall(_._2 == s"commit_group:$gi"), s"group $gi rows carry another tag")
+    }
+    assert(spark.read.parquet(dataDir.toString).count() == nDocs)
+    assert(tmpDirs(out).isEmpty, "a normal run left its temp dir behind")
+  }
+
+  test("no temp dir survives a kill after 2 commit groups plus its resume") {
+    val out = Files.createTempDirectory("graft_tmp").toString
+    val cfg = ExtractJob.Config(nBuckets = 16, groupSize = 4, runId = "k1",
+      failAfterGroups = Some(2))
+    val first = ExtractJob.run(spark, docs(300), out, cfg)
+    assert(first.processedBuckets == (0 until 8))
+    val second = ExtractJob.run(spark, docs(300), out,
+      cfg.copy(failAfterGroups = None, runId = "k2"))
+    assert(second.processedBuckets == (8 until 16))
+    assert(tmpDirs(out).isEmpty, "a temp dir survived the kill and resume")
+    assert(spark.read.parquet(s"$out/data").count() == 300)
+    // metrics history counts each committed doc once, across both runs
+    val mDocs = spark.read.parquet(s"$out/metrics")
+      .agg(org.apache.spark.sql.functions.sum("n_docs")).head.getLong(0)
+    assert(mDocs == 300)
   }
 }

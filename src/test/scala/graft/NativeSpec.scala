@@ -87,6 +87,28 @@ class NativeSpec extends AnyFunSuite {
     }
   }
 
+  test("pq_dist refuses a query length that is not a multiple of the code length") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val cb = ArrayData.toArrayData(Array(ArrayData.toArrayData(Array.fill(8)(0.5f))))
+    val q8 = ArrayData.toArrayData(Array.tabulate(8)(_.toFloat))
+    val q7 = ArrayData.toArrayData(Array.tabulate(7)(_.toFloat))
+    val two = ArrayData.toArrayData(Array(0, 0))
+    assert(NativeKernels.pqDist(q8, two, cb) ==
+      (0 until 8).map(j => (j - 0.5) * (j - 0.5)).sum)
+    intercept[IllegalArgumentException](NativeKernels.pqDist(q7, two, cb))
+    intercept[IllegalArgumentException](
+      NativeKernels.pqDist(q8, ArrayData.toArrayData(Array.empty[Int]), cb))
+    // the same refusal through the codegen'd expression
+    import spark.implicits._
+    NativeFunctions.ensureRegistered(spark)
+    val cbCol = array(array(Seq.fill(8)(lit(0.5f)): _*))
+    val bad = Seq((Array.tabulate(7)(_.toFloat), Array(0, 0))).toDF("q", "code")
+      .select(call_function("pq_dist", col("q"), col("code"), cbCol))
+    val e = intercept[Exception](bad.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+  }
+
   test("sq8_cos is bit-identical to the UDF-struct reference") {
     import spark.implicits._
     NativeFunctions.ensureRegistered(spark)
