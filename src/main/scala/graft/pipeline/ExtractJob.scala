@@ -12,8 +12,8 @@ import Manifests.deleteRecursively
 
 /** The end-to-end extraction job (SURVEY.md §4 physical plan):
   *
-  *   read -> drop committed buckets -> skew-aware partition ->
-  *   mapPartitions(tokenizer kernel) -> one write of every commit group ->
+  *   read -> skew-aware partition -> mapPartitions(drop committed buckets,
+  *   tokenizer kernel) -> one write of every commit group ->
   *   one metrics read-back -> per-group atomic rename + bucket manifests
   *
   * Scale design decisions, in order of importance at 10^12 docs:
@@ -51,6 +51,23 @@ import Manifests.deleteRecursively
   */
 object ExtractJob {
 
+  /** Heavy-branch relocation: heavy docs are spread over this many PINNED
+    * partitions (REPARTITION_BY_NUM, not AQE-coalescible) so a kernel+write
+    * task carries ~1-2 mega-docs. The relocation shuffle is kept
+    * unconditionally: a scan-side-only heavy branch was A/B'd in round 6
+    * (same corpus, same window) and lost ~30% at c16 — without relocation
+    * each heavy scan split funnels its ~20+ megas through one encode task.
+    * The count is sized from the DATA (expected heavies per run / target
+    * megas-per-task; at 10^12 docs set it from table stats), deliberately
+    * NOT from the core count: a cores-proportional count (an earlier round-6
+    * shape) launches more tasks on bigger clusters for the same 390 megas,
+    * pure scheduling overhead on the wider leg. 256 ≈ 1.5 megas/task at the
+    * bench's mega density; too few partitions re-creates the funnel via
+    * hash-collision stragglers (128 parts measured 35% slower at c16 than
+    * 512).
+    */
+  val HeavyParts = 256
+
   /** Shuffle-partition sizing rule (measured, BASELINE.md round-3 wave A/B):
     * on skewed corpora run MULTIPLE scheduling waves — shuffle partitions
     * >= 3-4x total cores — so mega-doc task-duration variance can be
@@ -71,21 +88,6 @@ object ExtractJob {
       nBuckets: Int = 32,
       groupSize: Int = 8,
       heavyWeight: Long = 5000000L,
-      // Heavy-branch relocation: heavy docs are spread over this many PINNED
-      // partitions (REPARTITION_BY_NUM, not AQE-coalescible) so a
-      // kernel+write task carries ~1-2 mega-docs. The relocation shuffle is
-      // kept unconditionally: a scan-side-only heavy branch was A/B'd in
-      // round 6 (same corpus, same window) and lost ~30% at c16 — without
-      // relocation each heavy scan split funnels its ~20+ megas through one
-      // encode task. The count is sized from the DATA (expected heavies per
-      // run / target megas-per-task; at 10^12 docs set it from table
-      // stats), deliberately NOT from the core count: a cores-proportional
-      // count (an earlier round-6 shape) launches more tasks on bigger
-      // clusters for the same 390 megas, pure scheduling overhead on the
-      // wider leg. 256 ≈ 1.5 megas/task at the bench's mega density; too
-      // few partitions re-creates the funnel via hash-collision stragglers
-      // (128 parts measured 35% slower at c16 than 512).
-      heavyParts: Int = 256,
       // Output writer options. Dictionary encoding is disabled by default:
       // extracted span text is high-cardinality, so the dictionary pass
       // burns encoder CPU and memory only to overflow and fall back —
@@ -203,25 +205,17 @@ object ExtractJob {
     // bucket -> index of its commit group; shipped to the kernel's closure
     val groupOf = Array.fill(nB)(-1)
     groups.zipWithIndex.foreach { case (g, gi) => g.foreach(groupOf(_) = gi) }
-    // weight + bucket computed as COLUMNS before the shuffle: a typed
-    // map-to-tuple here would deserialize + re-serialize every nested spans
-    // array once more per row; `aggregate` over the struct column and a
-    // string-only UDF stay on the columnar path
-    val bucketUdf = udf((id: String) => bucketOf(id, nB))
-    // octet_length, not length: byte count is O(1) on the UTF8 payload while
-    // character count rescans every byte, and the weight is a routing
+    // weight computed as a COLUMN before the shuffle: a typed map-to-tuple
+    // here would deserialize + re-serialize every nested spans array once
+    // more per row; `aggregate` over the struct column stays on the columnar
+    // path. octet_length, not length: byte count is O(1) on the UTF8 payload
+    // while character count rescans every byte, and the weight is a routing
     // heuristic — bytes are, if anything, the truer cost proxy (threshold
     // docs above updated to bytes).
-    val allKeyed = docs.toDF()
+    val weighted = docs.toDF()
       .withColumn("weight", aggregate(col("spans"), lit(0L), (acc, s) =>
         acc + octet_length(s.getField("text")).cast("long") +
           octet_length(s.getField("media_ref")).cast("long")))
-      .withColumn("bucket", bucketUdf(col("doc_id")))
-    // At 10^12 scale this filter is partition pruning on the bucketed input
-    // table; a fresh run reads everything and skips it.
-    val keyed =
-      if (committed.isEmpty) allKeyed
-      else allKeyed.filter(col("bucket").isin(remaining.map(Integer.valueOf): _*))
 
     // Light docs stay in their byte-balanced scan splits (a salted shuffle
     // bought no balance for a full corpus pass through the shuffle; round 6,
@@ -233,13 +227,13 @@ object ExtractJob {
     // ingest), so the heavy scan is ~free.
     //
     // The heavy repartition PINS its partition count at the data-sized
-    // `heavyParts`: a column-only repartition is AQE-coalescible, and AQE's
+    // `HeavyParts`: a column-only repartition is AQE-coalescible, and AQE's
     // byte-targeted coalescing packed the skewed bench corpus's megas 14-25
     // per task (local[16], round 6) — the very funnel isolation exists to
     // prevent. Pinned, each mega lands (nearly) alone in its kernel+write task.
-    val light = keyed.filter(col("weight") < heavy)
-    val heavyDs = keyed.filter(col("weight") >= heavy)
-      .repartition(cfg.heavyParts, col("doc_id"))
+    val light = weighted.filter(col("weight") < heavy)
+    val heavyDs = weighted.filter(col("weight") >= heavy)
+      .repartition(HeavyParts, col("doc_id"))
     // heavy partitions FIRST: union concatenates partition lists and Spark
     // schedules tasks in partition order — longest-processing-time-first
     // lets the mega-doc tasks run while light tasks pack around them instead
@@ -249,11 +243,16 @@ object ExtractJob {
       .select(col("doc_id"), col("spans")).as[Doc]
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
-        SpanTokenizer.extractPartition(it, tok).map { e =>
-          val b = bucketOf(e.doc_id, nB)
+        it.flatMap { d =>
+          val b = bucketOf(d.doc_id, nB)
           val gi = groupOf(b)
-          OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
-            e.extraction_path :+ s"commit_group:$gi", pid, b, gi)
+          // gi < 0: an already-committed bucket (a resumed run), dropped
+          // untokenized; at 10^12 docs, partition pruning on the input table
+          Option.when(gi >= 0) {
+            val e = SpanTokenizer.extract(d, tok)
+            OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
+              e.extraction_path :+ s"commit_group:$gi", pid, b, gi)
+          }
         }
       }
 

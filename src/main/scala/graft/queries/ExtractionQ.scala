@@ -342,8 +342,8 @@ object ExtractionQ {
     // The dir must outlive this call (the returned DataFrame reads it
     // lazily), so cleanup is deferred to JVM exit rather than leaked.
     // tmpfs when available: the queue write + read-back otherwise lands on
-    // the shared system disk (same per-executor-storage rationale as
-    // Bench.tmpBase and the streaming checkpoint root).
+    // the shared system disk, which stands in poorly for per-executor local
+    // storage (same rationale as the streaming checkpoint root).
     val shm = new java.io.File("/dev/shm")
     val outPath =
       if (shm.isDirectory && shm.canWrite)

@@ -21,8 +21,8 @@ object StreamingQ {
     * disk — with 32 shuffle partitions a single replayed micro-batch
     * performs hundreds of small synchronous writes+renames there, and that
     * disk I/O (not the join/aggregation) dominated the replay harness's
-    * wall-clock in round 5. tmpfs models per-executor local storage exactly
-    * as the bench's scaling corpus does (Bench.tmpBase rationale); on a real
+    * wall-clock in round 5. tmpfs models per-executor local storage, which
+    * the one shared system disk of a single host does not; on a real
     * cluster the checkpoint lives on each executor's local disk + a durable
     * store, both of which scale with the cluster.
     */
@@ -55,14 +55,13 @@ object StreamingQ {
     * alone dropped 3.5s -> 0.9s). Partition count does not affect any
     * result: state operators are key-partitioned and the watermark is
     * global. On a real cluster size this to keep per-store state in the
-    * 10⁴-10⁶-row band (SPARK_GRAFT_STREAM_SHUFFLE overrides). The session
-    * value is restored after the stream finishes — batch queries planned
-    * later are untouched.
+    * 10⁴-10⁶-row band. The session value is restored after the stream
+    * finishes — batch queries planned later are untouched.
     */
   private def withStateParts[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    spark.conf.set(key, "8")
     try f finally spark.conf.set(key, prev)
   }
 

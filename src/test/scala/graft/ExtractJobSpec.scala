@@ -96,12 +96,15 @@ class ExtractJobSpec extends AnyFunSuite {
     }
     val store = new LocalManifestStore(out)
     assert(store.committedBuckets().size == 2) // the torn group, half committed
+    // the crash skipped the run's own temp-dir cleanup: the sweep must do it
+    assert(tmpDirs(out).nonEmpty, "the simulated crash left no temp dir to sweep")
 
     val second = ExtractJob.run(spark, docs(nDocs), out,
       cfg.copy(failAfterBucketCommits = None, runId = "c2"))
     // the torn group's committed buckets were revoked -> everything reran
     assert(second.skippedBuckets.isEmpty)
     assert(second.processedBuckets.toSet == (0 until 8).toSet)
+    assert(tmpDirs(out).isEmpty, "a temp dir survived the crash and resume")
     val data = spark.read.parquet(s"$out/data")
     assert(data.count() == nDocs)
     assert(data.groupBy("doc_id").count().filter("count > 1").count() == 0)
@@ -222,6 +225,13 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(second.processedBuckets == (8 until 16))
     assert(tmpDirs(out).isEmpty, "a temp dir survived the kill and resume")
     assert(spark.read.parquet(s"$out/data").count() == 300)
+    // a kill after the last manifest commit but before the temp-dir cleanup
+    // leaves a fully committed outDir with a temp dir; the next run writes
+    // nothing, so only its sweep can remove the dir
+    Files.createDirectories(Paths.get(out, ".tmp-group-run", "commit_group=0"))
+    val third = ExtractJob.run(spark, docs(300), out, cfg.copy(failAfterGroups = None))
+    assert(third.processedBuckets.isEmpty && third.skippedBuckets == (0 until 16))
+    assert(tmpDirs(out).isEmpty, "a no-op run left a crashed run's temp dir")
     // metrics history counts each committed doc once, across both runs
     val mDocs = spark.read.parquet(s"$out/metrics")
       .agg(org.apache.spark.sql.functions.sum("n_docs")).head.getLong(0)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.ReviewSink
+import graft.pipeline.{BucketManifest, LocalManifestStore, ReviewSink}
 import graft.queries.ExtractionQ
 
 /** Review-sink DLQ semantics + exactly-once commit (reference
@@ -73,5 +73,19 @@ class ReviewSinkSpec extends AnyFunSuite {
     val third = ReviewSink.run(spark, routed, out, "r3")
     assert(!third.committedBefore && third.nEntries == first.nEntries)
     assert(spark.read.parquet(s"$out/queue").count() == first.nEntries)
+  }
+
+  test("an extraction bucket-0 manifest in the outDir is not the queue's") {
+    // ExtractJob commits extraction bucket 0 as _manifests/bucket-0.json;
+    // the sink must neither read it as a committed queue nor revoke it.
+    val out = Files.createTempDirectory("graft_rs3").toString
+    new LocalManifestStore(out).commit(BucketManifest(0, 11L, 222L, 3L, "extract"))
+    val bucket0 = Paths.get(out, "_manifests", "bucket-0.json")
+    val routed = ExtractionQ.x13Routing(spark, dir)
+    val stats = ReviewSink.run(spark, routed, out, "q1")
+    assert(!stats.committedBefore)
+    assert(stats.nEntries > 0 && Files.isDirectory(Paths.get(out, "queue")))
+    ReviewSink.revoke(out)
+    assert(Files.exists(bucket0), "revoking the queue removed extraction bucket 0")
   }
 }
